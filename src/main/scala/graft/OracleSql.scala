@@ -2504,10 +2504,12 @@ object OracleSql {
         |ORDER BY l_orderkey, l_linenumber""".stripMargin,
     // q222: composite primary keys — the (l_orderkey, l_linenumber)
     // rollup store replayed with per-TUPLE mutations: the by_pk inc
-    // touches exactly (1,7), the delete removes exactly (2,6), the
-    // new line (1,99) lands under the existing order, the upsert
-    // overwrites (2,2)'s quantity only; the read roots are composite
-    // point lookups against the raw table ((1,4) correctly absent)
+    // touches exactly the seed (1,901), the delete removes exactly the
+    // seed (2,902), the new line (1,99) lands under the existing
+    // order, the upsert overwrites the seed (3,903)'s quantity only;
+    // both read roots are composite point lookups against the raw
+    // table, `a` = (1,3) and `b` = (1,4) — whichever rows the scale
+    // factor holds (`b` is empty at sf0.01); qty breaks (src, k1) ties
     "q222_composite_pk" ->
       """WITH base AS (
         |  SELECT l_orderkey, l_linenumber,
@@ -2542,10 +2544,15 @@ object OracleSql {
         |  SELECT 'a' AS src, l_orderkey AS k1,
         |         l_linenumber::BIGINT AS k2,
         |         l_quantity AS qty, 1::BIGINT AS n
-        |  FROM lineitem WHERE l_orderkey = 1 AND l_linenumber = 3)
+        |  FROM lineitem WHERE l_orderkey = 1 AND l_linenumber = 3
+        |  UNION ALL
+        |  SELECT 'b' AS src, l_orderkey AS k1,
+        |         l_linenumber::BIGINT AS k2,
+        |         l_quantity AS qty, 1::BIGINT AS n
+        |  FROM lineitem WHERE l_orderkey = 1 AND l_linenumber = 4)
         |SELECT src, k1, k2, qty, n FROM store
         |UNION ALL SELECT src, k1, k2, qty, n FROM reads
-        |ORDER BY src, k1""".stripMargin,
+        |ORDER BY src, k1, qty""".stripMargin,
     // q219: relationship-predicate mutations — the EXISTS cascade
     // replayed natively: orders of (original) BUILDING customers
     // delete, then customers with a REMAINING >=480k order re-segment

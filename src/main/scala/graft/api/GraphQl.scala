@@ -217,6 +217,9 @@ object GraphQl {
     /** Fragment names actually spread — the spec's All-Fragments-Used
       * rule, same posture as unused variables. */
     val usedFrags = scala.collection.mutable.Set.empty[String]
+    /** The chosen operation's kind — `query` (also the bare `{...}`
+      * shorthand), `subscription` or `mutation`. */
+    var kind = "query"
     private var splices = 0
     private var at = 0
     def peek: Tok = toks(at)
@@ -1127,7 +1130,14 @@ object GraphQl {
     def fieldAs: Map[String, String] = fieldAsB.result()
   }
 
-  private final case class RelParts(nested: Seq[Nested], aggs: Seq[AggRel])
+  /** The tracked relationship `field` on `table`: an array
+    * relationship, else a Hasura OBJECT (many-to-one) one — the flag
+    * marks the one-object response. */
+  private def relOf(schema: Schema, table: String, field: String,
+      at: String): (Rel, Boolean) =
+    schema.rels.get((table, field)).map((_, false))
+      .orElse(schema.objRels.get((table, field)).map((_, true)))
+      .getOrElse(bad(s"$at: no tracked relationship on '$table'"))
 
   /** A relationship's selection set: scalars + any number of sibling
     * sub-relationships per level (array and object rels compose at
@@ -1170,12 +1180,7 @@ object GraphQl {
         // array relationships and OBJECT relationships both nest below
         // the root — siblings welcome (the reference's own FK graph
         // hangs offers AND bids off one NFT, x/common/types.go:51-52)
-        val (r2, single2) = schema.rels.get((rel.childTable, f2))
-          .map((_, false))
-          .orElse(schema.objRels.get((rel.childTable, f2))
-            .map((_, true)))
-          .getOrElse(bad(
-            s"$at.$f2: no tracked relationship on '${rel.childTable}'"))
+        val (r2, single2) = relOf(schema, rel.childTable, f2, s"$at.$f2")
         val s2 = compileRelBody(p, schema, rel.childTable, subArgs,
           subDirs, a2, f2, r2, single = single2)
         if (keep2) subs += s2
@@ -1208,15 +1213,6 @@ object GraphQl {
       single = single)
   }
 
-  /** Parse one GraphQL read query against `schema` → the same
-    * [[Request]] the DSL builds. Never throws.
-    *
-    * `variables` is the request's JSON variables map (the way every
-    * Hasura client ships literals): `query ($k: bigint!) { ... }` with
-    * `{"k": 50}`. Declared variables substitute at `$name` value
-    * positions; an undeclared `$name`, an unbound declared variable,
-    * or an unused binding is an error — silent nulls would be the
-    * wrong-rows failure mode. */
   /** The request's JSON variables map → parsed values. */
   private def jsonVars(variables: String): Map[String, V] = {
     val root = mapper.readTree(
@@ -1240,10 +1236,10 @@ object GraphQl {
 
   /** Parse the optional `($var: Type!, ...)` declarations after an
     * operation keyword, validate declared↔bound agreement, and arm the
-    * parser's variable table — shared by the query and mutation
-    * operation headers. */
+    * parser's variable table. The bare `{...}` shorthand declares
+    * nothing, so any binding there is an error. */
   private def parseOpVariables(p: P, vars: Map[String, V],
-      multiOp: Boolean = false): Unit = {
+      multiOp: Boolean): Unit = {
     val declared = Set.newBuilder[String]
     val resolved = Map.newBuilder[String, V]
     if (p.isPunct('(')) {
@@ -1291,48 +1287,61 @@ object GraphQl {
     p.variables = resolved.result()
   }
 
-  def parse(query: String, schema: Schema = fixtureSchema,
-      variables: String = "{}",
-      operationName: Option[String] = None): Either[String, Request] =
+  // ---- the operation skeleton ----------------------------------------
+
+  /** The operation kinds an entry point serves, by header keyword (the
+    * bare `{...}` shorthand is a `query`). `refuse` diagnoses any other
+    * chosen operation from its first token. */
+  private final case class Serves(kinds: Set[String],
+      refuse: Tok => String)
+
+  /** Reads: `query`, the shorthand, or `subscription` — a subscription
+    * document is a read served continuously (graft.api.Subscriptions
+    * routes it to the streaming twins); the keyword still matters to
+    * `_stream` roots (subscription-only). A mutation chosen by
+    * operationName is diagnosed AS a mutation, not mis-blamed on the
+    * variables or a '{'. */
+  private val readOps = Serves(Set("query", "subscription"),
+    t => s"the operation at ${t.pos} is a mutation — serve it through " +
+      "parseMutationFields, not the read path")
+
+  private val streamOps = Serves(Set("subscription"), {
+    case Name(_, _) => "<table>_stream is a subscription-only surface " +
+      "(Hasura serves it over no other operation type)"
+    case t => s"${t.pos}: expected 'subscription'"
+  })
+
+  private val mutationOps = Serves(Set("mutation"),
+    t => s"expected 'mutation' at ${t.pos} (read queries go through parse)")
+
+  /** The one skeleton every document entry point runs: variables JSON,
+    * tokens and fragments, the operation `operationName` picks (the
+    * declared/bound/used variable checks apply to the CHOSEN
+    * operation, per the spec), its header, then `body` over the
+    * operation's selection set, then the closing brace, end of input,
+    * the All-Variables-Used and All-Fragments-Used rules. Parse errors
+    * come back as Left values — the entry points never throw. */
+  private def operation[A](doc: String, variables: String,
+      operationName: Option[String], serves: Serves)(body: P => A)
+      : Either[String, A] =
     try {
       val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      // multi-operation documents select by operationName (the wire
-      // field every client POSTs); variable declared/bound/used
-      // checks apply to the CHOSEN operation, per the spec
+      val (allToks, frags) = extractFragments(tokenize(doc))
       val (opToks, nOps) = chooseOperation(allToks, operationName)
       val p = new P(opToks)
       p.fragments = frags
-      // optional operation header: `query [Name] [($var: type, ...)]`;
-      // `subscription` parses IDENTICALLY — a subscription document is
-      // a read query served continuously (graft.api.Subscriptions
-      // routes the parsed Request to the streaming twins). The keyword
-      // still matters to `_stream` roots (subscription-only).
-      var isSub = false
+      // header: `kind [Name] [($var: type, ...)]`, or the shorthand
       p.peek match {
-        // a mutation chosen by operationName (splitOperations accepts
-        // mutation headers) must be diagnosed AS a mutation — falling
-        // to the shorthand branch would mis-blame the variables or '{'
-        case Name("mutation", pos) =>
-          bad(s"the operation at $pos is a mutation — serve it " +
-            "through parseMutationFields, not the read path")
-        case Name(kw @ ("query" | "subscription"), _) =>
-          isSub = kw == "subscription"
+        case Name(kw, _) if serves.kinds(kw) =>
+          p.kind = kw
           p.next()
           p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case _ =>
-          // the bare `{...}` shorthand declares nothing, so any bound
-          // variable is an error (same rule as an explicit header)
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
+        case Punct('{', _) if serves.kinds("query") => ()
+        case t => bad(serves.refuse(t))
       }
+      parseOpVariables(p, vars, multiOp = nOps > 1)
       p.expect('{')
-      val (rootKey, rootKept, rootOp) =
-        parseRootField(p, schema, inSubscription = isSub)
-      if (!p.isPunct('}'))
-        bad("this document selects MULTIPLE root fields — serve it " +
-          "through parseRoots (one DataFrame per root)")
+      val a = body(p)
       p.expect('}')
       p.peek match {
         case Eof(_) => ()
@@ -1340,25 +1349,11 @@ object GraphQl {
       }
       (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
         bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
+          (if (p.kind == "mutation")
+            "a dropped predicate writes the wrong rows silently"
+          else "a dropped filter returns wrong rows silently")))
       checkFragmentsUsed(p, allToks, nOps)
-      // the Request API answers ONE DataFrame: a document whose only
-      // root is directive-excluded has nothing to answer with —
-      // parseRoots serves the spec's empty-selection case
-      if (!rootKept)
-        bad(s"$rootKey: the only root field is excluded by its " +
-          "directives — nothing to serve (parseRoots drops excluded " +
-          "roots)")
-      rootOp match {
-        case ReadRoot(req) => Right(req)
-        case ByPkRoot(req) => Right(req)
-        case AggRoot(_) => bad(s"$rootKey: aggregate roots serve " +
-          "through parseRootAggregate (one root) or parseRoots " +
-          "(batched with reads)")
-        case StreamRoot(_) => bad(s"$rootKey: `_stream` roots serve " +
-          "through parseStream (one root) or parseRoots (batched " +
-          "into a subscription document)")
-      }
+      Right(a)
     } catch {
       case Bad(m) => Left(m)
       case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
@@ -1367,6 +1362,63 @@ object GraphQl {
         Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
     }
 
+  /** The one-root entry points ([[parse]], [[parseRootAggregate]],
+    * [[parseStream]]): `root` parses the document's single root field
+    * into (responseKey, kept, value). Each answers ONE result, so a
+    * second root names [[parseRoots]], and a document whose only root
+    * is directive-excluded has nothing to serve. */
+  private def oneRoot[A](doc: String, variables: String,
+      operationName: Option[String], serves: Serves)
+      (root: P => (String, Boolean, A)): Either[String, (String, A)] =
+    operation(doc, variables, operationName, serves) { p =>
+      val r = root(p)
+      if (!p.isPunct('}'))
+        bad("this document selects MULTIPLE root fields — serve it " +
+          "through parseRoots (one DataFrame per root)")
+      r
+    }.flatMap {
+      case (key, true, a) => Right((key, a))
+      case (key, false, _) => Left(s"$key: the only root field is " +
+        "excluded by its directives — nothing to serve (parseRoots " +
+        "drops excluded roots)")
+    }
+
+  /** The root of a one-root `<table>_<kind>` document (`aggregate` or
+    * `stream`); `field` compiles it from its name. Any other root
+    * belongs to [[parse]]. */
+  private def namedRoot[A](p: P, kind: String)
+      (field: String => (Boolean, A)): (String, Boolean, A) = {
+    val root = p.name(s"root $kind field")
+    if (!root.endsWith(s"_$kind"))
+      bad(s"$root: expected <table>_$kind (plain reads go through parse)")
+    val (kept, a) = field(root)
+    (root, kept, a)
+  }
+
+  /** Parse one GraphQL read query against `schema` → the same
+    * [[Request]] the DSL builds. Never throws.
+    *
+    * `variables` is the request's JSON variables map (the way every
+    * Hasura client ships literals): `query ($k: bigint!) { ... }` with
+    * `{"k": 50}`. Declared variables substitute at `$name` value
+    * positions; an undeclared `$name`, an unbound declared variable,
+    * or an unused binding is an error — silent nulls would be the
+    * wrong-rows failure mode. Multi-operation documents select by
+    * `operationName` (the wire field every client POSTs). */
+  def parse(query: String, schema: Schema = fixtureSchema,
+      variables: String = "{}",
+      operationName: Option[String] = None): Either[String, Request] =
+    oneRoot(query, variables, operationName, readOps)(
+      parseRootField(_, schema)).flatMap {
+      case (_, ReadRoot(req)) => Right(req)
+      case (_, ByPkRoot(req)) => Right(req)
+      case (key, AggRoot(_)) => Left(s"$key: aggregate roots serve " +
+        "through parseRootAggregate (one root) or parseRoots " +
+        "(batched with reads)")
+      case (key, StreamRoot(_)) => Left(s"$key: `_stream` roots serve " +
+        "through parseStream (one root) or parseRoots (batched " +
+        "into a subscription document)")
+    }
 
   /** Parse a MULTI-ROOT read document — Hasura serves any number of
     * root fields per query operation (`{ a: customer {...} orders
@@ -1382,65 +1434,26 @@ object GraphQl {
       variables: String = "{}",
       operationName: Option[String] = None)
       : Either[String, Seq[(String, RootOp)]] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      // `_stream` roots are admitted only under an explicit
-      // `subscription` header (Hasura serves them over no other
-      // operation type) — track the keyword for parseRootField
-      var isSub = false
-      p.peek match {
-        case Name("mutation", pos) =>
-          bad(s"the operation at $pos is a mutation — serve it " +
-            "through parseMutationFields, not the read path")
-        case Name(kw @ ("query" | "subscription"), _) =>
-          isSub = kw == "subscription"
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case _ =>
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
-      }
-      p.expect('{')
+    operation(query, variables, operationName, readOps) { p =>
       val roots = Seq.newBuilder[(String, Boolean, RootOp)]
-      while (!p.isPunct('}'))
-        roots += parseRootField(p, schema, inSubscription = isSub)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
+      while (!p.isPunct('}')) roots += parseRootField(p, schema)
+      roots.result()
+    }.flatMap { allRoots =>
       // 5.3.2 on roots: identical repeats collapse; distinct requests
       // under one response key refuse; excluded roots contribute
       // nothing (they already fully compiled)
-      val allRoots = roots.result()
+      val kept = allRoots.filter(_._2).map(t => (t._1, t._3)).distinct
+      val dupKeys = kept.map(_._1).diff(kept.map(_._1).distinct).distinct
       // `{ }` is a GraphQL syntax error, not a directive exclusion —
       // diagnose it as the empty selection it is
-      if (allRoots.isEmpty) bad("empty selection set at the document root")
-      val kept = allRoots.filter(_._2).map(t => (t._1, t._3))
-        .distinct
-      val dupKeys = kept.map(_._1).diff(kept.map(_._1).distinct).distinct
-      if (dupKeys.nonEmpty)
-        bad(s"duplicate root response key(s): ${dupKeys.mkString(", ")}" +
+      if (allRoots.isEmpty) Left("empty selection set at the document root")
+      else if (dupKeys.nonEmpty)
+        Left(s"duplicate root response key(s): ${dupKeys.mkString(", ")}" +
           " — alias the colliding roots")
-      if (kept.isEmpty)
-        bad("every root field is excluded by its directives — " +
+      else if (kept.isEmpty)
+        Left("every root field is excluded by its directives — " +
           "nothing to serve")
-      Right(kept)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
+      else Right(kept)
     }
 
   /** Evaluate parsed roots in document order — one DataFrame per root,
@@ -1495,8 +1508,8 @@ object GraphQl {
     * `<table>_stream` roots serve here too. Shared by [[parse]]
     * (exactly one root) and [[parseRoots]] (Hasura's multi-root
     * batching). */
-  private def parseRootField(p: P, schema: Schema,
-      inSubscription: Boolean = false): (String, Boolean, RootOp) = {
+  private def parseRootField(p: P, schema: Schema)
+      : (String, Boolean, RootOp) = {
     val rfirst = p.name("root table")
     val (ralias, rootName) =
       if (p.isPunct(':')) {
@@ -1507,15 +1520,14 @@ object GraphQl {
       // (r18): subscription-only, like the one-root surface — a
       // query-operation document refuses the FIELD (the operation
       // kind is the problem, not the batching)
-      if (!inSubscription)
+      if (p.kind != "subscription")
         bad(s"$rootName: <table>_stream is a subscription-only " +
           "surface (Hasura serves it over no other operation type)")
       val (kept, sr) = compileStreamField(p, schema, rootName)
       return (ralias.getOrElse(rootName), kept, StreamRoot(sr))
     }
     if (rootName.endsWith("_aggregate")) {
-      val (kept, agg) = parseAggRootField(p, rootName,
-        rootName.stripSuffix("_aggregate"))
+      val (kept, agg) = parseAggRootField(p, rootName)
       return (ralias.getOrElse(rootName), kept, AggRoot(agg))
     }
       // Hasura's `<table>_by_pk(<pkcol>: v)` single-object field: one
@@ -1583,70 +1595,8 @@ object GraphQl {
               fname)
             (fdirs.keySet - "join").foreach(d =>
               bad(s"$fname: unknown directive @$d"))
-            p.expect('{')
-            var aggs: Seq[AggField] = Nil
-            var aggNodes: Seq[String] = Nil
-            while (!p.isPunct('}')) {
-              // fragments spread at every level of the aggregate
-              // shape, with Hasura's type names: the arm wrapper is
-              // `<child>_aggregate`, nodes rows are `<child>`, the
-              // aggregate fields `<child>_aggregate_fields`
-              if (p.isSpread) {
-                resolveSpread(p, s"${rel.childTable}_aggregate", fname)
-              } else
-              p.name("aggregate body") match {
-                case "aggregate" =>
-                  // same directive parity as the root-aggregate arm:
-                  // the arm still fully compiles, only its
-                  // contribution gates
-                  val (keepA, restA) = conditionalKeep(
-                    parseDirectives(p), s"$fname.aggregate")
-                  restA.keySet.foreach(d =>
-                    bad(s"$fname.aggregate: unknown directive @$d"))
-                  val as = compileAggFields(p, fname,
-                    s"${rel.childTable}_aggregate_fields",
-                    relCount(rel.childKey, fname))
-                  if (keepA)
-                    aggs = mergeAggArms(s"$fname.aggregate", aggs, as)
-                case "nodes" =>
-                  // Hasura's nodes arm inside a relationship
-                  // aggregate: the (sliced) child rows themselves,
-                  // next to their aggregates — one JSON array column
-                  // per parent, rendered in the relationship's
-                  // order_by order (canonical-sorted without one)
-                  val (keepN, restN) = conditionalKeep(
-                    parseDirectives(p), s"$fname.nodes")
-                  restN.keySet.foreach(d =>
-                    bad(s"$fname.nodes: unknown directive @$d"))
-                  if (aggNodes.nonEmpty) bad(s"$fname: duplicate nodes")
-                  p.expect('{')
-                  val ns = Seq.newBuilder[String]
-                  var parsedN = 0
-                  while (!p.isPunct('}')) {
-                    if (p.isSpread) {
-                      resolveSpread(p, rel.childTable, s"$fname.nodes")
-                    } else {
-                    val nf = p.name("nodes field")
-                    parsedN += 1
-                    val (keepF, restF) = conditionalKeep(
-                      parseDirectives(p), s"$fname.nodes.$nf")
-                    restF.keySet.foreach(d =>
-                      bad(s"$fname.nodes.$nf: unknown directive @$d"))
-                    if (keepF) ns += nf
-                    }
-                  }
-                  p.expect('}')
-                  if (parsedN == 0)
-                    bad(s"$fname.nodes: empty selection set")
-                  // an all-excluded nodes arm contributes nothing —
-                  // the fully-skipped no-op, as at the root
-                  if (keepN) aggNodes = ns.result()
-                case other => bad(
-                  s"$fname: expected 'aggregate' or 'nodes', " +
-                    s"got '$other'")
-              }
-            }
-            p.expect('}')
+            val (aggs, aggNodes) = compileAggBody(p, fname, rel.childTable,
+              relCount(rel.childKey, fname))
             val joinType = fdirs.get("join")
               .map(d => strDirArg(d, "join", "type", fname))
               .getOrElse("left")
@@ -1667,20 +1617,10 @@ object GraphQl {
               nodes = aggNodes, prefix = alias)
             if (keep) aggRels += a
           } else {
-            schema.rels.get((table, fname)) match {
-              case Some(rel) =>
-                val n = compileRelBody(p, schema, table, fargs,
-                  fdirs, alias, fname, rel)
-                if (keep) nested += n
-              case None =>
-                // Hasura OBJECT relationship (many-to-one): the same
-                // compile, `single` marks the one-object response
-                val rel = schema.objRels.getOrElse((table, fname), bad(
-                  s"$fname: no tracked relationship on '$table'"))
-                val n = compileRelBody(p, schema, table, fargs,
-                  fdirs, alias, fname, rel, single = true)
-                if (keep) nested += n
-            }
+            val (rel, single) = relOf(schema, table, fname, fname)
+            val n = compileRelBody(p, schema, table, fargs, fdirs, alias,
+              fname, rel, single = single)
+            if (keep) nested += n
           }
         } else {
           if (fargs.nonEmpty || fdirs.nonEmpty)
@@ -1740,57 +1680,17 @@ object GraphQl {
     * contract speaking, not a directive error. */
   def parseRootAggregate(query: String, variables: String = "{}")
       : Either[String, QueryBuilder.AggRequest] =
-    try {
-      val vars = jsonVars(variables)
-      val (opToks, frags) = extractFragments(tokenize(query))
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("query" | "subscription", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars)
-        case _ =>
-          vars.keySet.toSeq.sorted.headOption.foreach(k =>
-            bad(s"variables.$k bound but not declared by the operation"))
-      }
-      p.expect('{')
-      val root = p.name("root aggregate field")
-      if (!root.endsWith("_aggregate"))
-        bad(s"$root: expected <table>_aggregate " +
-          "(plain reads go through parse)")
-      val table = root.stripSuffix("_aggregate")
-      val (rootKept, req) = parseAggRootField(p, root, table)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, opToks, nOps = 1)
-      if (!rootKept)
-        bad(s"$root: the only root field is excluded by its " +
-          "directives — nothing to serve (parseRoots drops excluded " +
-          "roots)")
-      Right(req)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
-    }
-
+    oneRoot(query, variables, None, readOps)(p =>
+      namedRoot(p, "aggregate")(parseAggRootField(p, _))).map(_._2)
 
   /** Parse ONE `<table>_aggregate` ROOT field's arguments + body into
     * (kept, AggRequest) — shared by [[parseRootAggregate]] (exactly
     * one root) and [[parseRootField]] (aggregate roots batched next
     * to reads in a multi-root document). Root @include/@skip gate the
     * field; it still fully compiles. */
-  private def parseAggRootField(p: P, root: String, table: String)
+  private def parseAggRootField(p: P, root: String)
       : (Boolean, QueryBuilder.AggRequest) = {
+      val table = root.stripSuffix("_aggregate")
       val args = parseArgs(p)
       checkArgs(args, Set("where", "order_by", "limit", "offset"), root)
       // root directives (r17): @include/@skip gate the whole
@@ -1810,69 +1710,76 @@ object GraphQl {
       if ((limit.isDefined || offset > 0) && slice.isEmpty)
         bad(s"$root: limit/offset without order_by aggregates an " +
           "UNDEFINED subset — order the slice")
-      p.expect('{')
-      var aggs: Seq[AggField] = Nil
-      var nodes: Seq[String] = Nil
-      while (!p.isPunct('}')) {
-        // fragments spread at every level of the aggregate shape,
-        // with Hasura's type names: the body is `<table>_aggregate`,
-        // nodes rows are `<table>`, the aggregate fields
-        // `<table>_aggregate_fields` (spec: spreads are legal in any
-        // selection set, in every operation type)
-        if (p.isSpread) { resolveSpread(p, root, root) }
-        else
-        p.name("aggregate body") match {
-          case "aggregate" =>
-            // @include/@skip gate the aggregate arm like every other
-            // selection (spec directives apply to all operation
-            // types) — the arm still fully compiles, only its
-            // contribution drops
-            val (keepA, restA) = conditionalKeep(parseDirectives(p),
-              s"$root.aggregate")
-            restA.keySet.foreach(d =>
-              bad(s"$root.aggregate: unknown directive @$d"))
-            val as = compileAggFields(p, root,
-              s"${table}_aggregate_fields", rootCount(root))
-            if (keepA) aggs = mergeAggArms(s"$root.aggregate", aggs, as)
-          case "nodes" =>
-            // Hasura's nodes arm: the filtered rows themselves, next
-            // to their aggregates — served as one deterministic JSON
-            // array column (sorted by the first selected field)
-            val (keepN, restN) = conditionalKeep(parseDirectives(p),
-              s"$root.nodes")
-            restN.keySet.foreach(d =>
-              bad(s"$root.nodes: unknown directive @$d"))
-            // the duplicate rule counts KEPT arms (an excluded one
-            // never contributes, so it cannot occupy the slot)
-            if (nodes.nonEmpty) bad(s"$root: duplicate nodes")
-            p.expect('{')
-            val fs = Seq.newBuilder[String]
-            var parsedN = 0
-            while (!p.isPunct('}')) {
-              if (p.isSpread) {
-                resolveSpread(p, table, s"$root.nodes")
-              } else {
-              val nf = p.name("nodes field")
-              parsedN += 1
-              val (keepF, restF) = conditionalKeep(parseDirectives(p),
-                s"$root.nodes.$nf")
-              restF.keySet.foreach(d =>
-                bad(s"$root.nodes.$nf: unknown directive @$d"))
-              if (keepF) fs += nf
-              }
-            }
-            p.expect('}')
-            if (parsedN == 0) bad(s"$root.nodes: empty selection set")
-            // an all-excluded nodes arm contributes nothing — the
-            // fully-skipped-selection no-op, same as the stream path
-            if (keepN) nodes = fs.result()
-          case other =>
-            bad(s"$root: expected 'aggregate' or 'nodes', got '$other'")
-        }
-      }
-      p.expect('}')
+      val (aggs, nodes) = compileAggBody(p, root, table, rootCount(root))
       (rootKeep, QueryBuilder.AggRequest(table, where, aggs, nodes,
         orderBy = slice, limit = limit, offset = offset))
+  }
+
+  /** The `{ aggregate { … } nodes { … } }` body of an `_aggregate`
+    * selection over `child` — a root aggregate or a relationship one;
+    * `countArm` is [[rootCount]] or [[relCount]]. Fragments spread at
+    * every level with Hasura's type names (spec: spreads are legal in
+    * any selection set): the body is `<child>_aggregate`, nodes rows
+    * are `<child>`, the aggregate fields `<child>_aggregate_fields`.
+    * @include/@skip gate each arm like every other selection — the arm
+    * still fully compiles, only its contribution drops. Returns
+    * (aggregates, nodes fields). */
+  private def compileAggBody(p: P, at: String, child: String,
+      countArm: (Option[String], Map[String, V]) => AggField)
+      : (Seq[AggField], Seq[String]) = {
+    p.expect('{')
+    var aggs: Seq[AggField] = Nil
+    var nodes: Seq[String] = Nil
+    while (!p.isPunct('}')) {
+      if (p.isSpread) { resolveSpread(p, s"${child}_aggregate", at) }
+      else
+      p.name("aggregate body") match {
+        case "aggregate" =>
+          val (keepA, restA) = conditionalKeep(parseDirectives(p),
+            s"$at.aggregate")
+          restA.keySet.foreach(d =>
+            bad(s"$at.aggregate: unknown directive @$d"))
+          val as = compileAggFields(p, at, s"${child}_aggregate_fields",
+            countArm)
+          if (keepA) aggs = mergeAggArms(s"$at.aggregate", aggs, as)
+        case "nodes" =>
+          // Hasura's nodes arm: the (sliced) rows themselves, next to
+          // their aggregates — served as one deterministic JSON array
+          // column
+          val (keepN, restN) = conditionalKeep(parseDirectives(p),
+            s"$at.nodes")
+          restN.keySet.foreach(d =>
+            bad(s"$at.nodes: unknown directive @$d"))
+          // the duplicate rule counts KEPT arms (an excluded one
+          // never contributes, so it cannot occupy the slot)
+          if (nodes.nonEmpty) bad(s"$at: duplicate nodes")
+          p.expect('{')
+          val fs = Seq.newBuilder[String]
+          var parsedN = 0
+          while (!p.isPunct('}')) {
+            if (p.isSpread) {
+              resolveSpread(p, child, s"$at.nodes")
+            } else {
+            val nf = p.name("nodes field")
+            parsedN += 1
+            val (keepF, restF) = conditionalKeep(parseDirectives(p),
+              s"$at.nodes.$nf")
+            restF.keySet.foreach(d =>
+              bad(s"$at.nodes.$nf: unknown directive @$d"))
+            if (keepF) fs += nf
+            }
+          }
+          p.expect('}')
+          if (parsedN == 0) bad(s"$at.nodes: empty selection set")
+          // an all-excluded nodes arm contributes nothing — the
+          // fully-skipped-selection no-op, same as the stream path
+          if (keepN) nodes = fs.result()
+        case other =>
+          bad(s"$at: expected 'aggregate' or 'nodes', got '$other'")
+      }
+    }
+    p.expect('}')
+    (aggs, nodes)
   }
 
   // ---- streaming subscriptions (`<table>_stream`) --------------------
@@ -1886,7 +1793,8 @@ object GraphQl {
     * loudly (the engine, like Hasura, streams on one cursor column).
     * `initial_value: null` streams from the beginning; `ordering`
     * defaults ASC. The surface is subscription-only (Hasura serves
-    * `_stream` on no other operation type). Scalar selections ride
+    * `_stream` on no other operation type); a tabbed document selects
+    * its subscription by operationName. Scalar selections ride
     * the cursor scan directly; RELATIONSHIP selections (r17) compile
     * like a read's and attach per delivered page through
     * QueryBuilder.runOn. Operation variables work as in [[parse]]
@@ -1895,55 +1803,8 @@ object GraphQl {
       variables: String = "{}",
       operationName: Option[String] = None)
       : Either[String, Subscriptions.StreamRequest] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(query))
-      // the parse()/parseMutationFields multi-operation contract,
-      // completed for the third grammar: a tabbed document selects
-      // its subscription by operationName, wrong-kind picks diagnose
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("subscription", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case Name("query" | "mutation", _) =>
-          bad("<table>_stream is a subscription-only surface " +
-            "(Hasura serves it over no other operation type)")
-        case t =>
-          bad(s"${t.pos}: expected 'subscription'")
-      }
-      p.expect('{')
-      val root = p.name("root stream field")
-      if (!root.endsWith("_stream"))
-        bad(s"$root: expected <table>_stream (plain reads go " +
-          "through parse)")
-      val (kept, sr) = compileStreamField(p, schema, root)
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped filter returns wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      // the one-root stream API answers ONE page stream: a document
-      // whose only root is directive-excluded has nothing to serve
-      // (parseRoots drops excluded roots in a batch)
-      if (!kept)
-        bad(s"$root: the only root field is excluded by its " +
-          "directives — nothing to serve")
-      Right(sr)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
-    }
+    oneRoot(query, variables, operationName, streamOps)(p =>
+      namedRoot(p, "stream")(compileStreamField(p, schema, _))).map(_._2)
 
   /** Compile ONE `<table>_stream` field — arguments (cursor /
     * batch_size / where), root directives, and the selection body —
@@ -2049,11 +1910,7 @@ object GraphQl {
           // array and object rels compile exactly like a read's —
           // the serve path evaluates each page through
           // QueryBuilder.runOn (q193's posture)
-          val (r2, single2) = schema.rels.get((table, f))
-            .map((_, false))
-            .orElse(schema.objRels.get((table, f)).map((_, true)))
-            .getOrElse(bad(
-              s"$root.$f: no tracked relationship on '$table'"))
+          val (r2, single2) = relOf(schema, table, f, s"$root.$f")
           val n = compileRelBody(p, schema, table, fargs, restF,
             falias, f, r2, single = single2)
           if (n.as == "batch_idx") bad(s"$root: 'batch_idx' is the " +
@@ -2904,26 +2761,11 @@ object GraphQl {
       schema: Schema = fixtureSchema,
       operationName: Option[String] = None)
       : Either[String, Seq[Mutations.Field]] =
-    try {
-      val vars = jsonVars(variables)
-      val (allToks, frags) = extractFragments(tokenize(doc))
-      // the mirror of parse()'s multi-operation handling: a GraphiQL
-      // tab holding queries AND mutations selects the mutation by
-      // operationName; choosing a read operation here is diagnosed as
-      // such, the way parse() diagnoses a chosen mutation
-      val (opToks, nOps) = chooseOperation(allToks, operationName)
-      val p = new P(opToks)
-      p.fragments = frags
-      p.peek match {
-        case Name("mutation", _) =>
-          p.next()
-          p.peek match { case Name(_, _) => p.next(); case _ => () }
-          parseOpVariables(p, vars, multiOp = nOps > 1)
-        case t => bad(s"expected 'mutation' at ${t.pos} (read queries " +
-          "go through parse)")
-      }
-      p.expect('{')
-      val out = Seq.newBuilder[Mutations.Field]
+    // the mirror of parse()'s multi-operation handling: a GraphiQL tab
+    // holding queries AND mutations selects the mutation by
+    // operationName; choosing a read operation here is diagnosed as
+    // such, the way parse() diagnoses a chosen mutation
+    operation(doc, variables, operationName, mutationOps) { p =>
       // spec §5.3.2 on mutation roots: response keys (alias or verb
       // name) must be unique — identical repeats collapse and execute
       // ONCE (merged fields are one response entry), distinct fields
@@ -2982,11 +2824,7 @@ object GraphQl {
             // engine returns the full rows and renderReturning
             // attaches each relationship through QueryBuilder.runOn
             // (the _stream deliver posture)
-            val (rel, single2) = schema.rels.get((m.table, c))
-              .map((_, false))
-              .orElse(schema.objRels.get((m.table, c)).map((_, true)))
-              .getOrElse(bad(
-                s"$c: no tracked relationship on '${m.table}'"))
+            val (rel, single2) = relOf(schema, m.table, c, c)
             val n = compileRelBody(p, schema, m.table, fargs, fdirs,
               a, c, rel, single = single2)
             if (keepF) retNested += n
@@ -3074,7 +2912,7 @@ object GraphQl {
             as = falias)
           val key = falias.getOrElse(fname)
           seen.get(key) match {
-            case None => seen += key -> f; out += f
+            case None => seen += key -> f
             case Some(prev) if prev == f => () // identical: collapse
             case Some(_) =>
               bad(s"duplicate mutation response key '$key' — alias " +
@@ -3082,28 +2920,14 @@ object GraphQl {
           }
         }
       }
-      p.expect('}')
-      p.peek match {
-        case Eof(_) => ()
-        case t => bad(s"trailing content at ${t.pos}")
-      }
-      (p.variables.keySet -- p.used).toSeq.sorted.headOption.foreach(k =>
-        bad(s"variable $$$k declared and bound but never used — " +
-          "a dropped predicate writes the wrong rows silently"))
-      checkFragmentsUsed(p, allToks, nOps)
-      val ms = out.result()
+      (parsedFields, seen.values.toSeq)
+    }.flatMap {
       // a document with no fields AT ALL is malformed; one whose every
       // field was conditionally excluded is a valid NO-OP (the dry-run
       // toggle: GraphQL's fully-skipped selection answers empty data,
       // never an error)
-      if (parsedFields == 0) bad("mutation document has no mutation fields")
-      Right(ms)
-    } catch {
-      case Bad(m) => Left(m)
-      case e: NumberFormatException => Left(s"bad number: ${e.getMessage}")
-      case e: IllegalArgumentException => Left(e.getMessage)
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        Left(s"variables: not valid JSON: ${e.getOriginalMessage}")
+      case (0, _) => Left("mutation document has no mutation fields")
+      case (_, ms) => Right(ms)
     }
 
   // ---- mutation printer ----------------------------------------------
@@ -6254,7 +6078,8 @@ object GraphQl {
     * writes through the same parse → merge → AtomicSwap chain as every
     * scalar-keyed store, with the merge window partitioned on the FULL
     * tuple; the multi-root READ batch serves two composite point
-    * lookups (one present, one missing on the second component only).
+    * lookups (at sf0.01 one present, one missing on the second
+    * component only; other scale factors hold either tuple 0..n times).
     * DuckDB replays the rollup, the per-tuple CASE/anti-filter
     * mutations, and the point reads — an engine that collapsed rows
     * of one order, mass-updated an order's lines, or clash-rejected a
@@ -6422,6 +6247,6 @@ object GraphQl {
         count(lit(1)).as("n"))
       .select(lit("store").as("src"), col("k1"), col("k2"),
         col("qty"), col("n"))
-    store.unionByName(readRows).orderBy("src", "k1")
+    store.unionByName(readRows).orderBy("src", "k1", "qty")
   }
 }

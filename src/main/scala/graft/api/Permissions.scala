@@ -631,30 +631,26 @@ object Permissions {
     for {
       roots <- GraphQl.parseRoots(query, schema, variables,
         operationName)
-      secured <- roots.foldLeft(
-          Right(Seq.empty[(String, GraphQl.RootOp)])
-          : Either[String, Seq[(String, GraphQl.RootOp)]]) {
-        case (acc, (k, GraphQl.ReadRoot(r))) => acc.flatMap(ss =>
-          secure(r, role, policy)
-            .map(sr => ss :+ (k -> GraphQl.ReadRoot(sr))))
-        case (acc, (k, GraphQl.AggRoot(r))) => acc.flatMap(ss =>
-          secureAggregate(r, role, policy)
-            .map(sr => ss :+ (k -> GraphQl.AggRoot(sr))))
-        // by_pk roots are reads with the key-equality where: the
-        // role's row filter ANDs in through the same rewrite (a
-        // point lookup outside the grant answers zero rows, never
-        // leaks)
-        case (acc, (k, GraphQl.ByPkRoot(r))) => acc.flatMap(ss =>
-          secure(r, role, policy)
-            .map(sr => ss :+ (k -> GraphQl.ByPkRoot(sr))))
-        // a batched `_stream` root secures like the one-root stream
-        // surface; a RelPred row grant denies here the same way
-        // (the dedicated serveStreamAs overloads serve those roles)
-        case (acc, (k, GraphQl.StreamRoot(sr0))) => acc.flatMap(ss =>
-          secureStream(sr0, role, policy)
-            .map(sr => ss :+ (k -> GraphQl.StreamRoot(sr))))
-      }
+      secured <- sequence(roots.map { case (k, op) =>
+        secureRoot(op, role, policy).map(k -> _) })
     } yield GraphQl.runRoots(s, dir, secured)
+
+  /** Secure one parsed root for `role` through its kind's rewrite. */
+  private def secureRoot(op: GraphQl.RootOp, role: String,
+      policy: Policy): Either[String, GraphQl.RootOp] = op match {
+    case GraphQl.ReadRoot(r) => secure(r, role, policy).map(GraphQl.ReadRoot)
+    case GraphQl.AggRoot(r) =>
+      secureAggregate(r, role, policy).map(GraphQl.AggRoot)
+    // by_pk roots are reads with the key-equality where: the role's row
+    // filter ANDs in through the same rewrite (a point lookup outside
+    // the grant answers zero rows, never leaks)
+    case GraphQl.ByPkRoot(r) => secure(r, role, policy).map(GraphQl.ByPkRoot)
+    // a batched `_stream` root secures like the one-root stream
+    // surface; a RelPred row grant denies here the same way (the
+    // dedicated serveStreamAs overloads serve those roles)
+    case GraphQl.StreamRoot(sr) =>
+      secureStream(sr, role, policy).map(GraphQl.StreamRoot)
+  }
 
   /** [[serveAs]] for STREAMING subscription documents: parse the
     * `<table>_stream` text, secure it for the role, and serve the
@@ -822,10 +818,6 @@ object Permissions {
         else Right(())
     } yield Mutations.applyFieldsToStores(s, stores, sec)
 
-  /** Secure a ROOT-AGGREGATE request: the role's row filter ANDs into
-    * the where (an unfiltered count/sum over invisible rows would
-    * LEAK them as numbers), and every referenced column — aggregated,
-    * nodes, ordering, filtering — must be granted. */
   /** Grant checks + filter merge for an aggregate request, WITHOUT
     * the row-local guard — shared by [[secureAggregate]] (which adds
     * it, for runAggregate callers) and [[serveAggregateAs]] (which
@@ -844,6 +836,10 @@ object Permissions {
       }
     } yield r.copy(where = andWith(perm.filter, w2))
 
+  /** Secure a ROOT-AGGREGATE request: the role's row filter ANDs into
+    * the where (an unfiltered count/sum over invisible rows would
+    * LEAK them as numbers), and every referenced column — aggregated,
+    * nodes, ordering, filtering — must be granted. */
   def secureAggregate(r: QueryBuilder.AggRequest, role: String,
       policy: Policy): Either[String, QueryBuilder.AggRequest] =
     for {

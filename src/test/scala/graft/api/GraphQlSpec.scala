@@ -2461,4 +2461,80 @@ class GraphQlSpec extends SparkSpec {
     val doc = GraphQl.render(req)
     assert(GraphQl.parse(doc) === Right(req))
   }
+
+  test("the one-root entry points answer exactly the single root " +
+    "parseRoots returns, for every root kind") {
+    // (document, variables, operationName, schema)
+    val corpus = Seq(
+      ("""{ customer(where: {c_custkey: {_lte: 5}},
+         |    order_by: {c_custkey: asc}, limit: 3) {
+         |  c_custkey nation { n_name }
+         |  orders(limit: 2, order_by: {o_orderkey: asc}) { o_orderkey }
+         |} }""".stripMargin, "{}", None, GraphQl.fixtureSchema),
+      ("{ customer_by_pk(c_custkey: 7) { c_custkey c_name } }", "{}",
+        None, GraphQl.fixtureSchema),
+      ("""{ lineitem_by_pk(l_orderkey: 1, l_linenumber: 3) {
+         |  l_orderkey l_quantity } }""".stripMargin, "{}", None,
+        GraphQl.compositeSchema),
+      ("""{ orders_aggregate(where: {o_orderstatus: {_eq: "O"}},
+         |    order_by: {o_totalprice: desc}, limit: 5) {
+         |  aggregate { count sum { o_totalprice } }
+         |  nodes { o_orderkey }
+         |} }""".stripMargin, "{}", None, GraphQl.fixtureSchema),
+      (GraphQl.q204Query, "{}", None, GraphQl.fixtureSchema),
+      (GraphQl.q192Doc, "{}", None, GraphQl.fixtureSchema),
+      (GraphQl.q191Doc, """{"hide": true}""", Some("Pick"),
+        GraphQl.fixtureSchema),
+      ("""query C { customer(limit: 2) { ...Cols } }
+         |fragment Cols on customer { c_custkey orders { o_orderkey } }"""
+        .stripMargin, "{}", None, GraphQl.fixtureSchema),
+      ("""query ($k: bigint!) {
+         |  customer(where: {c_custkey: {_eq: $k}}) { c_custkey } }"""
+        .stripMargin, """{"k": 5}""", None, GraphQl.fixtureSchema),
+      ("""subscription ($on: Boolean!) {
+         |  orders_aggregate @include(if: $on) {
+         |    aggregate { count max @skip(if: true) { o_totalprice } }
+         |  } }""".stripMargin, """{"on": true}""", None,
+        GraphQl.fixtureSchema),
+      (GraphQl.q179Doc, """{"all": false}""", Some("Sel"),
+        GraphQl.fixtureSchema),
+      (GraphQl.q179Doc, "{}", Some("Other"), GraphQl.fixtureSchema))
+    val kinds = corpus.map { case (doc, vars, op, schema) =>
+      val roots = GraphQl.parseRoots(doc, schema, vars, op)
+        .fold(m => fail(s"$m\n$doc"), identity)
+      assert(roots.length === 1, doc)
+      val root = roots.head._2
+      val one = root match {
+        case GraphQl.ReadRoot(_) =>
+          GraphQl.parse(doc, schema, vars, op).map(GraphQl.ReadRoot)
+        case GraphQl.ByPkRoot(_) =>
+          GraphQl.parse(doc, schema, vars, op).map(GraphQl.ByPkRoot)
+        case GraphQl.AggRoot(_) =>
+          GraphQl.parseRootAggregate(doc, vars).map(GraphQl.AggRoot)
+        case GraphQl.StreamRoot(_) =>
+          GraphQl.parseStream(doc, schema, vars, op).map(GraphQl.StreamRoot)
+      }
+      assert(one === Right(root), doc)
+      root.getClass.getSimpleName
+    }
+    assert(kinds.toSet ===
+      Set("ReadRoot", "ByPkRoot", "AggRoot", "StreamRoot"))
+  }
+
+  private def aggLeft(doc: String): String =
+    GraphQl.parseRootAggregate(doc).fold(identity, r => fail(s"parsed: $r"))
+
+  test("parseRootAggregate: a document of several operations needs " +
+    "operationName, like every other entry point") {
+    val agg = "{ orders_aggregate { aggregate { count } } }"
+    val m = aggLeft(s"query A $agg\nquery B $agg")
+    assert(m.contains("operationName is required"), m)
+  }
+
+  test("parseRootAggregate: a mutation document is diagnosed as one, " +
+    "the way parse diagnoses it") {
+    val m = aggLeft("mutation { delete_customer(" +
+      "where: {c_custkey: {_eq: 1}}) { affected_rows } }")
+    assert(m.contains("serve it through parseMutationFields"), m)
+  }
 }
